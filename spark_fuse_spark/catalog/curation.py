@@ -1046,9 +1046,9 @@ def t_dsir(spark: SparkSession, sf: str) -> DataFrame:
     "The iterative-Spark discipline showcase (operators/graph.pagerank): "
     "per round exactly two partial-agg'd shuffles (rank join on src, "
     "contribution groupBy on dst), edge list persisted once, dangling "
-    "mass folded back via a 1-row broadcast panel in the SAME plan (no "
-    "per-iteration driver action), and eager localCheckpoint every 3 "
-    "rounds so lineage stays bounded.  Rows-only driver check; the "
+    "mass read as an observed metric of the round's own checkpoint job "
+    "(no separate per-round job), and an eager localCheckpoint every "
+    "round so lineage stays bounded.  Rows-only driver check; the "
     "numerics are pinned against a numpy power iteration in "
     "tests/test_graph_pagerank.py.",
 )

@@ -1006,9 +1006,10 @@ ORDER BY role, score_micro DESC, node
     "max-renormalization by exact integer floor division) so the "
     f"{_HITS_ROUNDS}-round recurrence replays bit-identically as "
     "unrolled HUGEINT SQL.  Scale: per half-round one score-onto-edges "
-    "join + one partial-agg'd groupBy (the pagerank shuffle shape), a "
-    "1-row broadcast max panel, per-round localCheckpoint lineage "
-    "truncation; both top-k cuts are distributed TakeOrdered.",
+    "join + one partial-agg'd groupBy (the pagerank shuffle shape), the "
+    "renormalization max read as an observed metric of the half-round's "
+    "localCheckpoint job (which also truncates lineage); both top-k cuts "
+    "are distributed TakeOrdered.",
 )
 def x_hits_suppliers(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.graph import hits
@@ -1190,10 +1191,10 @@ ORDER BY p DESC, node LIMIT {_PREXACT_TOPK}
     "path — not just its row count — is value-hash-verified.  The float "
     "variant remains the probability-semantics operator (numpy-pinned); "
     "this one is the differential-testing form.  Scale: per round one "
-    "score-onto-edges join + one partial-agg'd inflow groupBy + a 1-row "
-    "(dangling, N) broadcast panel folded into the same plan, "
-    "localCheckpoint per round; the top-k cut is distributed "
-    "TakeOrdered.  (operators/graph.pagerank_exact)",
+    "score-onto-edges join + one partial-agg'd inflow groupBy, the "
+    "dangling mass read as an observed metric of the round's "
+    "localCheckpoint job and N counted once at setup; the top-k cut is "
+    "distributed TakeOrdered.  (operators/graph.pagerank_exact)",
 )
 def x_pagerank_exact(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.graph import pagerank_exact

@@ -23,7 +23,7 @@ is net-new surface built for the training-data pipeline brief.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -44,8 +44,11 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
     return fwd.union(rev).where(F.col("u") != F.col("v"))
 
 
-def _round_checkpoint(df: DataFrame, checkpoint_dir: "str | None", eager: bool = True) -> DataFrame:
-    """Per-round lineage truncation for the iterative operators.
+def _round_checkpoint(spark: SparkSession, checkpoint_dir: "str | None"):
+    """The one place the iterative operators materialize a round.
+
+    Call it once per operator call; it returns ``checkpoint(df,
+    eager=True, metric=None)``, the per-round lineage truncation.
 
     Default (``checkpoint_dir=None``): ``localCheckpoint`` — blocks live
     on executors WITHOUT replication, so on a multi-node cluster an
@@ -56,13 +59,54 @@ def _round_checkpoint(df: DataFrame, checkpoint_dir: "str | None", eager: bool =
     switch every round to a RELIABLE ``checkpoint`` — survives executor
     loss at the cost of writing each round's state to the checkpoint
     dir.  Results are identical either way; only fault-tolerance and
-    per-round I/O differ.
+    per-round I/O differ.  The directory is set on the SparkContext
+    here, once per operator call, not once per round.
+
+    ``metric`` (one aggregate column): attached to the round as an
+    ``Observation`` and computed DURING the round's checkpoint job, so a
+    loop scalar (dangling mass, renormalization max) costs no job of its
+    own.  An observed metric is readable only after that job runs, so
+    the round is checkpointed eagerly and ``checkpoint`` returns
+    ``(frame, metric value)`` instead of the frame.
     """
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    sc.setCheckpointDir(checkpoint_dir)
-    return df.checkpoint(eager=eager)
+    if checkpoint_dir is not None:
+        spark.sparkContext.setCheckpointDir(checkpoint_dir)
+
+    def checkpoint(df: DataFrame, eager: bool = True, metric: "Column | None" = None):
+        if metric is None:
+            if checkpoint_dir is None:
+                return df.localCheckpoint(eager=eager)
+            return df.checkpoint(eager=eager)
+        obs = Observation()
+        df = checkpoint(df.observe(obs, metric))
+        (value,) = obs.get.values()
+        return df, value
+
+    return checkpoint
+
+
+def _node_degrees(e: DataFrame) -> "tuple[DataFrame, int, int]":
+    """Persisted ``(node, deg)`` over src ∪ dst of a ``(u, v)`` edge list
+    (``deg`` = out-degree, 0 for dangling nodes), plus the node count and
+    the dangling-node count — both read in ONE job, which also
+    materializes the persisted table and, through it, a persisted ``e``.
+    The degree rides INSIDE the iterated state table, so no per-round
+    rank-onto-degree join exists at all."""
+    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+    nodes = (
+        e.select(F.col("u").alias("node"))
+        .union(e.select(F.col("v").alias("node")))
+        .distinct()
+    )
+    nd = (
+        nodes.join(deg, nodes.node == deg.u, "left")
+        .select("node", F.coalesce("d", F.lit(0)).cast("long").alias("deg"))
+        .persist()
+    )
+    n, n_dangling = nd.agg(
+        F.count(F.lit(1)), F.count(F.when(F.col("deg") == 0, 1))
+    ).first()
+    return nd, n, n_dangling
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -128,7 +172,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 20,
-    eager_rounds: bool = False,
     checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
     """Component labels for every node appearing in ``pairs``.
@@ -152,13 +195,13 @@ def connected_components(
     # instead of re-normalizing + re-deduping it every round (one fewer
     # exchange per round; _small_star's output satisfies the same
     # invariant by construction)
+    ckpt = _round_checkpoint(pairs.sparkSession, checkpoint_dir)
     a = F.col(id_a).cast("long")
     b = F.col(id_b).cast("long")
-    edges = _round_checkpoint(
+    edges = ckpt(
         pairs.select(F.greatest(a, b).alias("u"), F.least(a, b).alias("v"))
         .where(F.col("u") != F.col("v"))
-        .distinct(),
-        checkpoint_dir,
+        .distinct()
     )
     converged = False
     for _ in range(max_iterations):
@@ -171,9 +214,7 @@ def connected_components(
         # (eager-materialize + diff; measured 6.0 s for 6 rounds over
         # 823 edges at sf0.1, i.e. pure per-job overhead).  Next round's
         # consumers then read the already-materialized checkpoint.
-        # ``eager_rounds=True`` restores the old two-job cadence (A/B
-        # instrument; results identical either way).
-        new_edges = _round_checkpoint(_small_star(ls), checkpoint_dir, eager=eager_rounds)
+        new_edges = ckpt(_small_star(ls), eager=False)
         # fixpoint when the directed edge sets match.  Both sides satisfy
         # the boundary invariant (directed u > v, deduped) — the old side
         # by entry normalization, the new by _small_star's construction —
@@ -264,7 +305,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 1,
     checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
     """Power-iteration PageRank over an edge list (Brin & Page 1998),
@@ -277,28 +317,20 @@ def pagerank(
       ``dst`` — both partial-agg'd; the edge list itself is persisted
       once and reused every round, so the heavy relation is shuffled
       for the join but never recomputed from source;
-    * every ``checkpoint_every`` rounds (default EVERY round) the rank
-      table is eagerly ``localCheckpoint``-ed — without this the lineage
-      doubles per iteration and planning time, task binaries, and
-      failure-replay cost grow without bound (the classic
-      iterative-Spark trap).  Every-round is the right default because
-      the rank table has multiple consumers per round (the contribution
-      join and the next state build; on the ``checkpoint_every > 1``
-      panel path also the dangling 1-row broadcast subtree): with
-      un-checkpointed lineage each consumer
-      re-executes the previous rounds' joins independently — the
-      broadcast panel does not share work with the main plan — so a
-      k-round checkpoint interval multiplies, not adds, replayed work
-      (measured: every-3 → every-1 cut the 10-round suppliers graph
-      from ~7.7 s to ~4 s at sf0.1 with bit-identical floats, the
-      checkpointed state being only O(nodes) rows);
+    * the rank table is eagerly ``localCheckpoint``-ed every round —
+      without this the lineage doubles per iteration and planning time,
+      task binaries, and failure-replay cost grow without bound (the
+      classic iterative-Spark trap).  The rank table has two consumers
+      per round (the contribution join and the next state build), so
+      un-checkpointed lineage would re-execute the previous rounds'
+      joins once per consumer; the checkpointed state is only
+      O(nodes) rows;
     * dangling mass (nodes with no out-edges) is folded back uniformly
-      via ONE scalar readout per round on the rank table (O(nodes),
-      not O(edges)) — on the default every-round-checkpoint path the
-      readout is an ``observe`` metric collected DURING the round's
-      checkpoint job, so no separate per-round panel job exists at all
-      (for ``checkpoint_every > 1`` it falls back to the broadcast
-      1-row-aggregate panel, which needs no round action);
+      via ONE scalar per round on the rank table (O(nodes), not
+      O(edges)), read as an ``observe`` metric DURING the round's
+      checkpoint job, so no per-round panel job exists at all.  The
+      round-0 mass (every node starts at ``1/n``) comes from the setup
+      job that counts the nodes;
     * ranks sum to 1 at every step (probability semantics), so
       convergence is monitorable and results comparable across graphs.
 
@@ -306,89 +338,50 @@ def pagerank(
     checkpoint directory to survive executor loss on a real cluster;
     the local default truncates lineage without replication.
 
-    Returns ``node, rank`` (unnormalized node set = src ∪ dst).
-    Deterministic up to float reduction order (the observe readout
-    merges per-task partials in task-completion order, the panel
-    aggregate in partition order — both are unordered float sums within
-    the operator's declared determinism contract); validated against a
+    Returns ``node, rank`` (unnormalized node set = src ∪ dst); an empty
+    edge list returns an empty frame.  Deterministic up to float
+    reduction order (the observe readout merges per-task partials in
+    task-completion order — an unordered float sum within the
+    operator's declared determinism contract); validated against a
     numpy power iteration in tests.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
+    ckpt = _round_checkpoint(edges.sparkSession, checkpoint_dir)
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
         F.col(src).isNotNull() & F.col(dst).isNotNull()
     )
     e = e.persist()
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("__deg"))
-    nodes = e.select(F.col("u").alias("node")).union(
-        e.select(F.col("v").alias("node"))
-    ).distinct()
-    # out-degree per node, 0 for dangling (no out-edges) — the degree
-    # rides INSIDE the iterated state table, so no per-iteration
-    # rank-onto-degree join exists at all (one fewer shuffle per round)
-    nd = nodes.join(deg, nodes.node == deg.u, "left").select(
-        "node", F.coalesce("__deg", F.lit(0)).alias("__deg")
-    ).persist()
-    n = nd.count()  # one job; also materializes the persisted edge set
+    nd, n, n_dangling = _node_degrees(e)
+    if n == 0:
+        e.unpersist()
+        return nd.unpersist().select("node", F.lit(0.0).alias("rank"))
     state = nd.withColumn("rank", F.lit(1.0 / n))
+    dm = n_dangling / n
 
     dm_agg = F.coalesce(
-        F.sum(F.when(F.col("__deg") == 0, F.col("rank"))), F.lit(0.0)
+        F.sum(F.when(F.col("deg") == 0, F.col("rank"))), F.lit(0.0)
     ).alias("__dm")
-    observe_dm = checkpoint_every == 1
-    if observe_dm:
-        # round-0 dangling mass: one O(nodes) scalar job over the
-        # persisted state (the same aggregate the panel path folds into
-        # its broadcast subtree); each subsequent round's mass then
-        # rides the round's checkpoint job as an observed metric
-        dm = state.where(F.col("__deg") == 0).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0))
-        ).first()[0]
-
-    for i in range(iterations):
+    for _ in range(iterations):
         contrib = (
-            e.join(state.where(F.col("__deg") > 0), e.u == F.col("node"))
-            .select(F.col("v").alias("node"), (F.col("rank") / F.col("__deg")).alias("__c"))
+            e.join(state.where(F.col("deg") > 0), e.u == F.col("node"))
+            .select(F.col("v").alias("node"), (F.col("rank") / F.col("deg")).alias("__c"))
             .groupBy("node")
             .agg(F.sum("__c").alias("__in"))
         )
-        if observe_dm:
-            state = (
-                nd.join(contrib, "node", "left")
-                .select(
-                    "node",
-                    "__deg",
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping)
-                        * (F.coalesce("__in", F.lit(0.0)) + F.lit(dm / n))
-                    ).alias("rank"),
-                )
+        state = (
+            nd.join(contrib, "node", "left")
+            .select(
+                "node",
+                "deg",
+                (
+                    F.lit((1.0 - damping) / n)
+                    + F.lit(damping)
+                    * (F.coalesce("__in", F.lit(0.0)) + F.lit(dm / n))
+                ).alias("rank"),
             )
-            obs = Observation()
-            state = _round_checkpoint(state.observe(obs, dm_agg), checkpoint_dir)
-            dm = obs.get["__dm"] or 0.0
-        else:
-            # dangling mass as a 1-row aggregate folded into the SAME
-            # plan (broadcast scalar panel) — not a per-iteration driver
-            # collect.  Required when intermediate rounds have no action
-            # to observe through.
-            dangling = state.where(F.col("__deg") == 0).agg(dm_agg)
-            state = (
-                nd.join(contrib, "node", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "node",
-                    "__deg",
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping)
-                        * (F.coalesce("__in", F.lit(0.0)) + F.col("__dm") / n)
-                    ).alias("rank"),
-                )
-            )
-            if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-                state = _round_checkpoint(state, checkpoint_dir)
+        )
+        state, dm = ckpt(state, metric=dm_agg)
     e.unpersist()
     nd.unpersist()
     return state.select("node", "rank")
@@ -417,15 +410,15 @@ def label_propagation(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
+    ckpt = _round_checkpoint(edges.sparkSession, checkpoint_dir)
     adj = _symmetrize(edges).select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     )
     nodes = adj.select(F.col("src").alias("node")).distinct()
-    adjp = _round_checkpoint(
+    adjp = ckpt(
         adj.unionAll(
             nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-        ),
-        checkpoint_dir,
+        )
     )
     labels = nodes.select("node", F.col("node").alias("lbl"))
     for _ in range(rounds):
@@ -439,7 +432,7 @@ def label_propagation(
             # one blocking job per round — while each round's checkpoint
             # still truncates lineage as it is computed.
         )
-        labels = _round_checkpoint(labels, checkpoint_dir, eager=False)
+        labels = ckpt(labels, eager=False)
     return labels
 
 
@@ -483,8 +476,7 @@ def hits(
     plus the round's MAX read off as an ``observe`` metric DURING the
     half-round's checkpoint job and folded back as an integer literal:
     no separate max-panel job, no broadcast.  The metric is an exact
-    integer max (reduction-order-free), so scores are bit-identical to
-    the broadcast-panel formulation.  The RAW sums are
+    integer max (reduction-order-free).  The RAW sums are
     ``localCheckpoint``-ed per half-round — the renormalized frame has
     two consumers (the next half-round's join and, for the final round,
     the returned frame), and the checkpoint doubles as the per-round
@@ -498,12 +490,11 @@ def hits(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
+    ckpt = _round_checkpoint(edges.sparkSession, checkpoint_dir)
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
 
     def _renorm(raw: DataFrame) -> DataFrame:
-        obs = Observation()
-        raw = _round_checkpoint(raw.observe(obs, F.max("raw").alias("m")), checkpoint_dir)
-        m = obs.get["m"]
+        raw, m = ckpt(raw, metric=F.max("raw").alias("m"))
         if m is None:  # empty graph — no rows to renormalize either way
             m = 1
         return raw.select(
@@ -531,10 +522,9 @@ def hits(
         )
         hubs = _renorm(h_raw)
     # every half-round is eagerly checkpointed inside _renorm, so the
-    # returned frames read only checkpoint blocks (+ broadcast panels)
-    # and never ``e`` — release it instead of leaking an edge-sized
-    # cached frame into the session's storage pool (guide §5; this was
-    # the one persist site in the repo without a matching unpersist)
+    # returned frames read only checkpoint blocks and never ``e`` —
+    # release it instead of leaking an edge-sized cached frame into the
+    # session's storage pool
     e.unpersist()
     return hubs, auths
 
@@ -581,6 +571,7 @@ def personalized_pagerank(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
+    ckpt = _round_checkpoint(edges.sparkSession, checkpoint_dir)
     # e is consumed twice building ewd (the degree agg and the join
     # probe); persisting it keeps the caller's edge subtree from
     # executing twice when ewd first materializes
@@ -615,7 +606,7 @@ def personalized_pagerank(
                 ).cast("long").alias("p"),
             )
         )
-        state = _round_checkpoint(state, checkpoint_dir)
+        state = ckpt(state)
     e.unpersist()
     ewd.unpersist()
     seed_panel.unpersist()
@@ -661,11 +652,9 @@ def pagerank_exact(
     Scale shape (same as :func:`pagerank`): per round one score-onto-
     edges join + one partial-agg'd inflow ``groupBy`` — two shuffles.
     The dangling mass is an ``observe`` metric collected DURING each
-    round's checkpoint job (exact integer sum — reduction-order-free,
-    so scores are bit-identical to the previous broadcast-panel
-    formulation, which cost one extra panel job per round); the node
-    count N is a loop constant measured once at setup (the same job
-    that materializes the persisted degree table).  State is
+    round's checkpoint job (exact integer sum — reduction-order-free);
+    the node count N is a loop constant measured once at setup (the
+    same job that materializes the persisted degree table).  State is
     checkpointed every round so lineage stays bounded
     (``checkpoint_dir``: see :func:`_round_checkpoint`).  Sums ride in
     64-bit longs.
@@ -682,41 +671,23 @@ def pagerank_exact(
     every edge of every round; the integer ``DIV`` is exact, so the
     scores are bit-identical.)
 
-    Returns ``(node, deg, score_micro)`` over the full node set.
+    Returns ``(node, deg, score_micro)`` over the full node set; an
+    empty edge list returns an empty frame.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
+    ckpt = _round_checkpoint(edges.sparkSession, checkpoint_dir)
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    nd = (
-        nodes.join(deg, nodes.node == deg.u, "left")
-        .select("node", F.coalesce("d", F.lit(0)).cast("long").alias("deg"))
-        .persist()
-    )
+    # N is a loop constant; the initial dangling mass is exactly
+    # n_dangling × scale because every node starts at ``scale``
+    nd, n, n_dangling = _node_degrees(e)
+    if n == 0:
+        e.unpersist()
+        return nd.unpersist().select(
+            "node", "deg", F.lit(0).cast("long").alias("score_micro")
+        )
+    dang = n_dangling * int(scale)
     teleport = (damp_den - damp_num) * scale // damp_den
-
-    # the out-degree rides INSIDE the iterated state table (same design
-    # as the float :func:`pagerank`), so the per-edge push divides by
-    # state's own ``deg`` — no separate (edges ⋈ degree) relation exists
-    # at all.  The previous ``ewd = e.join(deg)`` paid a one-time
-    # edge-sized sort-merge join and cached an edge-sized table for a
-    # column the join partner already carried.
-    # one setup job sizes the graph (N is a loop constant; the initial
-    # dangling mass is exactly n_dangling × scale because every node
-    # starts at ``scale``) and materializes the persisted nd + e
-    sizes = nd.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(F.when(F.col("deg") == 0, F.lit(1)).cast("long")), F.lit(0).cast("long")
-        ).alias("nd0"),
-    ).first()
-    n = int(sizes["n"])
-    dang = int(sizes["nd0"]) * int(scale)
 
     dang_agg = F.coalesce(
         F.sum(F.when(F.col("deg") == 0, F.col("p"))), F.lit(0).cast("long")
@@ -724,10 +695,8 @@ def pagerank_exact(
     state = nd.select("node", "deg", F.lit(int(scale)).cast("long").alias("p"))
     for _ in range(iterations):
         # the per-node dangling share is pure integer floor division on
-        # two loop scalars — computed on the driver (Python ints, exact,
-        # identical to the previous in-plan DIV) and folded in as a
-        # literal: the former 1-row broadcast (dang, n) panel cost one
-        # extra job per round for the same two numbers
+        # two loop scalars — computed on the driver (Python ints, exact)
+        # and folded in as a literal
         dang_share = (dang * int(damp_num)) // (n * int(damp_den))
         infl = (
             e.join(state, e.u == state.node)
@@ -740,7 +709,6 @@ def pagerank_exact(
             .groupBy("inode")
             .agg(F.sum("sh").alias("infl"))
         )
-        obs = Observation()
         state = (
             nd.join(infl, nd.node == infl.inode, "left")
             .select(
@@ -751,10 +719,8 @@ def pagerank_exact(
                     + F.coalesce("infl", F.lit(0).cast("long"))
                 ).alias("p"),
             )
-            .observe(obs, dang_agg)
         )
-        state = _round_checkpoint(state, checkpoint_dir)
-        dang = int(obs.get["dang"] or 0)
+        state, dang = ckpt(state, metric=dang_agg)
     e.unpersist()
     nd.unpersist()
     return state.select("node", "deg", F.col("p").alias("score_micro"))

@@ -61,11 +61,95 @@ def test_dedup_clusters_labels_singletons_and_keepers(spark):
     assert sorted(keep) == [1, 7, 9]
 
 
-def test_cc_empty_pairs(spark):
-    from spark_fuse_spark.operators.graph import connected_components
+_EDGES = "src long, dst long"
 
-    pairs = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components(pairs).count() == 0
+
+@pytest.mark.parametrize(
+    "run, columns",
+    [
+        pytest.param(
+            lambda G, e: G.connected_components(e("id_a long, id_b long")),
+            ["node", "component"],
+            id="connected_components",
+        ),
+        pytest.param(
+            lambda G, e: G.label_propagation(e("u long, v long")),
+            ["node", "lbl"],
+            id="label_propagation",
+        ),
+        pytest.param(lambda G, e: G.pagerank(e(_EDGES)), ["node", "rank"], id="pagerank"),
+        pytest.param(
+            lambda G, e: G.pagerank_exact(e(_EDGES)),
+            ["node", "deg", "score_micro"],
+            id="pagerank_exact",
+        ),
+        pytest.param(lambda G, e: G.hits(e(_EDGES)), ["node", "score_micro"], id="hits"),
+        pytest.param(
+            lambda G, e: G.personalized_pagerank(e(_EDGES), e("node long")),
+            ["node", "score_micro"],
+            id="personalized_pagerank",
+        ),
+    ],
+)
+def test_graph_operators_empty_input(spark, run, columns):
+    """Every graph operator returns empty frames with its documented
+    columns on an empty edge list (no division by a zero node count)."""
+    from spark_fuse_spark.operators import graph as G
+
+    out = run(G, lambda schema: spark.createDataFrame([], schema))
+    for frame in out if isinstance(out, tuple) else (out,):
+        assert frame.columns == columns
+        assert frame.count() == 0
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        pytest.param(lambda G, e, **kw: G.pagerank(e, iterations=3, **kw), id="pagerank"),
+        pytest.param(
+            lambda G, e, **kw: G.pagerank_exact(e, iterations=3, **kw), id="pagerank_exact"
+        ),
+        pytest.param(lambda G, e, **kw: G.hits(e, iterations=2, **kw), id="hits"),
+        pytest.param(
+            lambda G, e, **kw: G.connected_components(e.toDF("id_a", "id_b"), **kw),
+            id="connected_components",
+        ),
+    ],
+)
+def test_graph_operators_reliable_checkpoint_dir(spark, tmp_path, monkeypatch, run):
+    """``checkpoint_dir`` switches every round to a reliable checkpoint
+    with the same results (floats to 1e-12, integers exactly), setting
+    the SparkContext checkpoint dir once per operator call."""
+    from pyspark import SparkContext
+
+    from spark_fuse_spark.operators import graph as G
+
+    dirs = []
+    real_set = SparkContext.setCheckpointDir
+
+    def counting_set(self, directory):
+        dirs.append(directory)
+        real_set(self, directory)
+
+    monkeypatch.setattr(SparkContext, "setCheckpointDir", counting_set)
+    edges = spark.createDataFrame(
+        [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (2, 4), (7, 8)], _EDGES
+    )
+
+    def rows(out):
+        frames = out if isinstance(out, tuple) else (out,)
+        return [sorted(map(tuple, f.collect())) for f in frames]
+
+    default = rows(run(G, edges))
+    assert dirs == []
+    ckpt_dir = str(tmp_path / "ckpt")
+    reliable = rows(run(G, edges, checkpoint_dir=ckpt_dir))
+    assert dirs == [ckpt_dir]
+    assert any(p.is_file() for p in (tmp_path / "ckpt").rglob("*"))
+    for got, want in zip(reliable, default):
+        assert [r[:-1] for r in got] == [r[:-1] for r in want]
+        # integer scores differ by at least 1 when they differ at all
+        assert [r[-1] for r in got] == pytest.approx([r[-1] for r in want], abs=1e-12, rel=0)
 
 
 # ---------------------------------------------------------------- packing
